@@ -1,0 +1,32 @@
+package graft.bench
+
+/** Minimal JSON writer for the harness's result file (maps, sequences,
+  * strings, numbers, booleans). Doubles are written with all their digits. */
+object Json {
+  def apply(v: Any): String = v match {
+    case null                => "null"
+    case s: String           => quote(s)
+    case b: Boolean          => b.toString
+    case d: Double           => if (d.isNaN || d.isInfinite) "null" else d.toString
+    case n: Int              => n.toString
+    case n: Long             => n.toString
+    case m: scala.collection.Map[_, _] =>
+      m.toSeq.map { case (k, x) => quote(k.toString) + ":" + apply(x) }.mkString("{", ",", "}")
+    case xs: Iterable[_]     => xs.map(apply).mkString("[", ",", "]")
+    case other               => quote(other.toString)
+  }
+
+  private def quote(s: String): String = {
+    val b = new StringBuilder("\"")
+    s.foreach {
+      case '"'  => b ++= "\\\""
+      case '\\' => b ++= "\\\\"
+      case '\n' => b ++= "\\n"
+      case '\r' => b ++= "\\r"
+      case '\t' => b ++= "\\t"
+      case c if c < ' ' => b ++= f"\\u${c.toInt}%04x"
+      case c    => b += c
+    }
+    (b += '"').toString
+  }
+}
