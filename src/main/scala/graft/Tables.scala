@@ -1,23 +1,66 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.ConcurrentHashMap
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Readers for the harness test tables (FIXTURES.md §A).
   *
-  * Parquet is self-describing, so no inference pass is needed (unlike the
-  * reference's CSV `inferSchema=True` triple-scan —
-  * linehaul_source_to_bronze.py:109-141). Each reader is a plain parquet
-  * scan; Catalyst handles column pruning + predicate pushdown, so callers
-  * should express projections/filters declaratively and let them reach the
-  * scan.
+  * Parquet is self-describing, so there is no CSV-style `inferSchema`
+  * scan of the data (the reference's triple scan —
+  * linehaul_source_to_bronze.py:109-141). Its schema still has to be read
+  * from a footer, though, and a schema-less `spark.read.parquet` starts a
+  * Spark job to do that. [[parquet]] pays that job once per table content
+  * and session; every later read passes the remembered schema. Each reader
+  * is a plain parquet scan; Catalyst handles column pruning + predicate
+  * pushdown, so callers should express projections/filters declaratively
+  * and let them reach the scan.
   */
 object Tables {
   val names: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
+  /** Parquet reader confs that change the schema inference returns for the
+    * same files. */
+  private val InferenceConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong", "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp", "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema", "spark.sql.sources.partitionColumnTypeInference.enabled")
+
+  /** session -> (path, inference confs) -> (content fingerprint, schema).
+    * Weak in the session, so a stopped session's entries can be collected. */
+  private val schemas = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[SparkSession,
+      ConcurrentHashMap[(String, Seq[Option[String]]), (String, StructType)]])
+
+  /** `spark.read.parquet(path)` with the inferred schema memoized per
+    * session, inference confs and content fingerprint
+    * ([[graft.ml.ArtifactStore.fingerprint]]): an unchanged table is read
+    * with its known schema and starts no job, a table rewritten in place
+    * is inferred again. Only the schema is kept, never the DataFrame, so
+    * two reads are two relations and self-joins still resolve. A path
+    * that is not a local file or directory (a URI, a glob) is read
+    * without the memo. */
+  def parquet(spark: SparkSession, path: String): DataFrame =
+    if (!Files.exists(Paths.get(path))) spark.read.parquet(path)
+    else {
+      val memo = schemas.computeIfAbsent(spark, _ => new ConcurrentHashMap)
+      val key = (path, InferenceConfs.map(spark.conf.getOption))
+      val fp = graft.ml.ArtifactStore.fingerprint(path)
+      Option(memo.get(key)) match {
+        case Some((`fp`, schema)) => spark.read.schema(schema).parquet(path)
+        case _ =>
+          val df = spark.read.parquet(path)
+          memo.put(key, (fp, df.schema))
+          df
+      }
+    }
+
   def load(spark: SparkSession, sfDir: String, table: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$table.parquet")
+    parquet(spark, s"$sfDir/$table.parquet")
 
   def region(s: SparkSession, d: String): DataFrame    = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = load(s, d, "nation")

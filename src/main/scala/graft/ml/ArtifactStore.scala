@@ -192,25 +192,30 @@ object ArtifactStore {
   /** Content fingerprint of `tables` under corpus dir `d`: every regular
     * file's (relative path, size, mtime, tail bytes), sorted, hashed.
     * O(file count) — no data scan (one 16-byte pread per file). */
-  def fingerprint(d: String, tables: Seq[String]): String = {
+  def fingerprint(d: String, tables: Seq[String]): String =
+    sha(tables.sorted.flatMap(t => fileSigs(Paths.get(d, t + ".parquet"), t)).mkString("\n"))
+
+  /** The same content fingerprint for one file or directory tree. */
+  def fingerprint(path: String): String =
+    sha(fileSigs(Paths.get(path), path).mkString("\n"))
+
+  /** The walk behind [[fingerprint]]: one sorted entry per regular file
+    * under `p`, or `<label>:absent` when nothing is there. */
+  private def fileSigs(p: Path, label: String): Seq[String] = {
     import scala.jdk.CollectionConverters._
-    val parts = tables.sorted.flatMap { t =>
-      val p = Paths.get(d, t + ".parquet")
-      if (!Files.exists(p)) Seq(s"$t:absent")
-      else {
-        val stream = Files.walk(p)
-        try stream.iterator().asScala
-          .filter(Files.isRegularFile(_))
-          .map { f =>
-            val size = Files.size(f)
-            s"${p.relativize(f)}:$size:${Files.getLastModifiedTime(f).toMillis}:" +
-              tailSig(f, size)
-          }
-          .toSeq.sorted
-        finally stream.close()
-      }
+    if (!Files.exists(p)) Seq(s"$label:absent")
+    else {
+      val stream = Files.walk(p)
+      try stream.iterator().asScala
+        .filter(Files.isRegularFile(_))
+        .map { f =>
+          val size = Files.size(f)
+          s"${p.relativize(f)}:$size:${Files.getLastModifiedTime(f).toMillis}:" +
+            tailSig(f, size)
+        }
+        .toSeq.sorted
+      finally stream.close()
     }
-    sha(parts.mkString("\n"))
   }
 
   private def markerOf(dir: Path): Option[String] = {

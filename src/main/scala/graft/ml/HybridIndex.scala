@@ -62,17 +62,17 @@ object HybridIndex {
 
   /** Trained coarse quantizer: (cluster, cent array<double>), k rows. */
   def centroids(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(ensure(s, d) + "/centroids")
+    Tables.parquet(s, ensure(s, d) + "/centroids")
 
   /** Corpus cell assignment: (vec_id, cluster). */
   def assigned(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(ensure(s, d) + "/assigned")
+    Tables.parquet(s, ensure(s, d) + "/assigned")
 
   /** Lexical index: (doc_id, sig0..sig7, sh_set) — 8 MinHash signatures
     * plus the df-capped shingle set (set-valued, order-irrelevant:
     * consumers only intersect it). */
   def docsSig(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(ensure(s, d) + "/docs_sig")
+    Tables.parquet(s, ensure(s, d) + "/docs_sig")
 
   /** The collected k×dim model, cluster-ordered — what consumers embed
     * as literal centroid arrays (the q274 codegen-assign discipline). */

@@ -25,7 +25,7 @@ object TruthTables {
       (make: => DataFrame): DataFrame = {
     val (dir, _) = ArtifactStore.ensure(s, d, kind, Seq("embeddings"))(
       out => make.write.mode("overwrite").parquet(out))
-    s.read.parquet(dir)
+    graft.Tables.parquet(s, dir)
   }
 
   /** q38's brute-force cosine top-5 as (qid, cid) — the ground truth

@@ -77,9 +77,8 @@ object GraphOps {
     // is restored here — before the sort — so ties order exactly as the
     // all-string pipeline did.
     val top = ranks
-      .withColumn("node",
-        when(col("node") % 2 === 0, concat(lit("c"), expr("node div 2")))
-          .otherwise(concat(lit("s"), expr("(node - 1) div 2"))))
+      .withColumn("node", concat(
+        when(col("node") % 2 === 0, lit("c")).otherwise(lit("s")), shiftright(col("node"), 1)))
       .orderBy(col("rank").desc, col("node")).limit(20)
     val w = Window.orderBy(col("rank").desc, col("node"))
     top.withColumn("rnk", row_number().over(w))

@@ -540,7 +540,7 @@ object Round9Ops {
     val (dir, _) = graft.ml.ArtifactStore.ensure(s, d, "grams", Seq("documents")) {
       out => spanGramsCompute(s, d).write.mode("overwrite").parquet(out)
     }
-    s.read.parquet(dir)
+    Tables.parquet(s, dir)
   }
 
   private def spanGramsCompute(s: SparkSession, d: String): DataFrame = {

@@ -1,9 +1,10 @@
 package graft.pipeline
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileUtil, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import java.sql.Timestamp
 
@@ -90,12 +91,13 @@ object Medallion {
   }
 
   /** Empty-input gate (`linehaul_source_to_bronze.py:114-119`), but without
-    * the reference's triple scan: the input is counted once from a cached
-    * plan; returns None when empty. */
-  def nonEmptyOrNone(df: DataFrame): Option[DataFrame] = {
-    val cached = df.persist()
-    if (cached.isEmpty) { cached.unpersist(); None } else Some(cached)
-  }
+    * the reference's triple scan: `isEmpty` is a limit-1 probe that reads
+    * one row, and the full row count rides the bronze write (see
+    * [[runTable]]). Nothing is cached, so the input is scanned again by
+    * that write instead of being column-encoded into memory first;
+    * returns None when empty. */
+  def nonEmptyOrNone(df: DataFrame): Option[DataFrame] =
+    if (df.isEmpty) None else Some(df)
 
   private def fs(spark: SparkSession, path: String) =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -137,23 +139,23 @@ object Medallion {
   }
 
   /** Silver sink with historic/current routing
-    * (`linehaul_bronze_silver.py:197-271`): first load writes Historic AND
-    * current; refreshes only overwrite current. */
+    * (`linehaul_bronze_silver.py:197-271`): first load fills Historic AND
+    * current; refreshes only overwrite current. A first load evaluates and
+    * encodes silver once, into Historic, and then copies Historic's files
+    * to current with Hadoop `FileUtil.copy`: the two partitions hold the
+    * same bytes, without a cached copy of silver or a second encode. */
   def writeSilver(
       spark: SparkSession, silver: DataFrame, basePath: String, table: String,
       today: String): String = {
     val current = s"$basePath/$table/datePart=$today"
     val historic = s"$basePath/$table/datePart=Historic"
     val tablePath = s"$basePath/$table"
-    val firstLoad = !fs(spark, tablePath).exists(new Path(tablePath))
+    val hfs = fs(spark, tablePath)
+    val firstLoad = !hfs.exists(new Path(tablePath))
     if (firstLoad) {
-      // two actions share one evaluation of the silver transform (scan +
-      // rename + dedup shuffle) instead of recomputing it per write
-      val cached = silver.persist()
-      try {
-        cached.write.mode(SaveMode.Overwrite).parquet(historic)
-        cached.write.mode(SaveMode.Overwrite).parquet(current)
-      } finally cached.unpersist()
+      silver.write.mode(SaveMode.Overwrite).parquet(historic)
+      FileUtil.copy(hfs, new Path(historic), hfs, new Path(current), false,
+        spark.sparkContext.hadoopConfiguration)
     } else {
       silver.write.mode(SaveMode.Overwrite).parquet(current)
     }
@@ -168,8 +170,7 @@ object Medallion {
     * `inferSchema=True` (which costs a full extra scan per file and makes
     * types nondeterministic across loads — `linehaul_source_to_bronze.py:
     * 109-112`). */
-  def readCsv(spark: SparkSession, path: String,
-      schema: org.apache.spark.sql.types.StructType): DataFrame =
+  def readCsv(spark: SparkSession, path: String, schema: StructType): DataFrame =
     spark.read.format("csv").option("header", true).schema(schema).load(path)
 
   /** Run-report table (`linehaul_source_to_bronze.py:185`): list of
@@ -228,7 +229,7 @@ object Medallion {
       spark: SparkSession, csvPath: String, bronzeBase: String, silverBase: String,
       table: String, database: String, updatedBy: String, updatedOn: Timestamp,
       today: String,
-      schema: Option[org.apache.spark.sql.types.StructType] = None,
+      schema: Option[StructType] = None,
       cfgOverride: Option[TableConfig] = None): Option[RunReport] = {
     val t0 = System.nanoTime()
     // explicit schema (readCsv) when the caller knows it — kills the
@@ -248,13 +249,15 @@ object Medallion {
           org.apache.spark.sql.functions.lit(1)).as("n"))
       val bronzeTarget = resolveBronzeTarget(spark, bronzeBase, table, today)
       writeBronze(enriched, bronzeTarget)
-      val bronze = spark.read.parquet(bronzeTarget)
+      // read bronze back with the schema just written (partitionBy moves
+      // year_month last): a schema-less read starts a footer-reading job
+      val (ym, data) = enriched.schema.partition(_.name == "year_month")
+      val bronze = spark.read.schema(StructType(data ++ ym)).parquet(bronzeTarget)
       val cfg = cfgOverride.getOrElse(
         TableConfig.registry.getOrElse(table, TableConfig(table)))
       val silver = bronzeToSilverDf(bronze, cfg)
       writeSilver(spark, silver, silverBase, table, today)
       val n = obs.get("n").asInstanceOf[Long]
-      staged.unpersist()
       RunReport(table, database, n, (System.nanoTime() - t0) / 1e9)
     }
   }

@@ -109,6 +109,38 @@ class PipelineSpec extends AnyFunSuite {
     val r2 = Medallion.runTable(spark, emptyCsv, s"$tmp/bronze2", s"$tmp/silver2",
       "claim", "db1", "u1", Timestamp.valueOf("2026-01-01 00:00:00"), "2026-08-12")
     assert(r2.isEmpty)
+    // the gate fires before any write: no bronze or silver directory
+    assert(!Files.exists(tmp.resolve("bronze2/claim")))
+    assert(!Files.exists(tmp.resolve("silver2/claim")))
+  }
+
+  test("runTable: 4 jobs per first load and per refresh, nothing cached, " +
+      "Historic and current silver identical") {
+    val tmp = Files.createTempDirectory("medallion_jobs")
+    val csv = tmp.resolve("claim.csv").toString
+    val staged = claims().withColumn("updated_on", col("datecreated"))
+    staged.coalesce(1).write.option("header", true).csv(csv)
+    def run(today: String) = {
+      val r = Jobs.count(spark)(Medallion.runTable(spark, csv,
+        s"$tmp/bronze", s"$tmp/silver", "claim", "db1", "u1",
+        Timestamp.valueOf("2026-01-01 00:00:00"), today, Some(staged.schema)))
+      // isEmpty probe, bronze write, and the silver write's shuffle map
+      // stage and result stage. A schema-inferring bronze read or a second
+      // silver encode adds a job; a persist shows as a cached RDD.
+      assert(r.value.exists(_.count == 3))
+      assert(r.jobs == 4, s"runTable for $today ran ${r.jobs} jobs")
+      assert(r.cachedRdds == 0, s"runTable for $today cached ${r.cachedRdds} RDDs")
+      assert(spark.sharedState.cacheManager.isEmpty, "runTable left a relation cached")
+    }
+    spark.catalog.clearCache() // earlier suites' entries are not under test
+    run("2026-08-12")
+    val historic = spark.read.parquet(s"$tmp/silver/claim/datePart=Historic")
+    val current = spark.read.parquet(s"$tmp/silver/claim/datePart=2026-08-12")
+    assert(historic.count() == 2)
+    assert(historic.exceptAll(current).isEmpty && current.exceptAll(historic).isEmpty)
+    run("2026-08-13")
+    assert(spark.read.parquet(s"$tmp/silver/claim/datePart=2026-08-13").count() == 2)
+    assert(Files.exists(tmp.resolve("bronze/claim/datePart=2026-08-13")))
   }
 
   test("retry succeeds after transient failures and rethrows after exhaustion") {
